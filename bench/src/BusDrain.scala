@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Lets the benchmark wait until every listener event posted so far has been
+  * delivered, so counters read after an action include that action. The
+  * listener bus is package-private to Spark, hence this package. */
+object BenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
