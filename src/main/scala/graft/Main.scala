@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
-import graft.enrich.EnrichmentConfig
+import graft.enrich.{EnrichmentConfig, EnrichmentPipeline}
 import graft.sources.Sources
 
 /** Standalone enrichment application — the Spark twin of the reference's
@@ -63,9 +64,15 @@ object Main {
 
   def main(argv: Array[String]): Unit = {
     val args = parse(argv.toList, Args())
-    require(args.input.nonEmpty || args.transport.nonEmpty,
-      "--input (or --transport + --transport-config) is required")
     require(args.good.nonEmpty, "--good is required")
+    args.mode match {
+      case "batch" => require(args.input.nonEmpty, "--input is required in batch mode")
+      case "stream" =>
+        require(args.input.nonEmpty || args.transport.nonEmpty,
+          "--input (or --transport + --transport-config) is required in stream mode")
+        require(args.checkpoint.nonEmpty, "--checkpoint is required in stream mode")
+      case other => throw new IllegalArgumentException(s"unknown mode: $other")
+    }
 
     val builder = SparkSession.builder()
       .appName("graft-enrich")
@@ -98,113 +105,75 @@ object Main {
     // etlTstamp: job start)
     val etlUs = org.apache.spark.sql.functions.lit(System.currentTimeMillis() * 1000L)
     // replay payload inside envelopes = the raw collector columns
-    def payloadCols(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    def payloadCols(df: DataFrame): Seq[String] =
       Sources.CollectorTsvFields.map(_._1).filter(df.columns.contains) match {
         case Nil => df.columns.toSeq.take(6)
         case cols => cols
       }
 
-    args.mode match {
-      case "batch" =>
-        val raw = args.format match {
+    // the two output sides, the same in batch and stream: good enriched
+    // rows, and one reference-compatible bad-row envelope JSON document
+    // per failed event
+    def goodSide(p: EnrichmentPipeline, df: DataFrame): DataFrame = p.split(df)._1
+    def badSide(p: EnrichmentPipeline, df: DataFrame): DataFrame =
+      p.badRowsJson(df, payloadCols(df), etlUs).select("bad_row")
+
+    if (args.mode == "batch") {
+      val raw = args.format match {
+        case "collector-tsv" =>
+          graft.enrich.Protocol.fromCollector(Sources.collectorTsv(spark, args.input))
+        case "cloudfront" =>
+          graft.enrich.Protocol.fromCollector(Sources.parseCloudfrontLog(spark.read.text(args.input)))
+        case "parquet" => spark.read.parquet(args.input)
+        case other => throw new IllegalArgumentException(s"unknown format: $other")
+      }
+      // two sinks with different formats (parquet rows vs envelope text)
+      // cost one chain evaluation each; when a single parquet root works,
+      // EnrichmentPipeline.splitWrite does both sides in ONE pass
+      goodSide(pipeline, raw).write.mode("append").parquet(args.good)
+      if (args.bad.nonEmpty) badSide(pipeline, raw).write.mode("append").text(args.bad)
+      if (!reused) spark.stop()
+    } else {
+      val raw =
+        if (args.transport.nonEmpty) {
+          // reference-app transport config → connector binding → framing →
+          // watermark-bounded (shard, seq) redelivery absorption →
+          // collector TSV parse — the full migration path in one flag
+          require(args.transportConfig.nonEmpty,
+            "--transport needs --transport-config <reference input-section JSON>")
+          val framed = graft.sources.TransportFactories
+            .fromJson(args.transport, readFile(args.transportConfig))
+            .binding.open(spark)
+          graft.enrich.Protocol.fromCollector(Sources.parseCollectorTsv(
+            graft.streaming.Transport.absorbRedelivery(framed)))
+        } else args.format match {
           case "collector-tsv" =>
-            graft.enrich.Protocol.fromCollector(Sources.collectorTsv(spark, args.input))
-          case "cloudfront" =>
-            graft.enrich.Protocol.fromCollector(Sources.parseCloudfrontLog(spark.read.text(args.input)))
-          case "parquet" => spark.read.parquet(args.input)
-          case other => throw new IllegalArgumentException(s"unknown format: $other")
+            graft.enrich.Protocol.fromCollector(Sources.collectorTsvStream(spark, args.input))
+          case other => throw new IllegalArgumentException(
+            s"unknown streaming format: $other (broker streams read through " +
+              "--transport kafka|kinesis|pubsub|nsq --transport-config <json>)")
         }
-        // two sinks with different formats (parquet rows vs envelope text)
-        // cost one chain evaluation each; when a single parquet root works,
-        // EnrichmentPipeline.splitWrite does both sides in ONE pass
-        val (good, _) = pipeline.split(raw)
-        good.write.mode("append").parquet(args.good)
-        if (args.bad.nonEmpty)
-          // the reference-compatible bad stream: one self-describing
-          // bad-row envelope JSON document per failed event
-          pipeline.badRowsJson(raw, payloadCols(raw), etlUs)
-            .select("bad_row").write.mode("append").text(args.bad)
-
-      case "stream" =>
-        require(args.checkpoint.nonEmpty, "--checkpoint is required in stream mode")
-        import org.apache.spark.sql.functions.{col, size}
-        val raw =
-          if (args.transport.nonEmpty) {
-            // reference-app transport config → connector binding → framing →
-            // watermark-bounded (shard, seq) redelivery absorption →
-            // collector TSV parse — the full migration path in one flag
-            require(args.transportConfig.nonEmpty,
-              "--transport needs --transport-config <reference input-section JSON>")
-            val framed = graft.sources.TransportFactories
-              .bindingFromJson(args.transport, readFile(args.transportConfig))
-              .open(spark)
-            graft.enrich.Protocol.fromCollector(Sources.parseCollectorTsv(
-              graft.streaming.Transport.absorbRedelivery(framed)))
-          } else args.format match {
-            case "collector-tsv" =>
-              graft.enrich.Protocol.fromCollector(Sources.collectorTsvStream(spark, args.input))
-            case "kafka" =>
-              // --input broker1:9092,broker2:9092/topic
-              val (bootstrap, topic) = args.input.split("/", 2) match {
-                case Array(b, t) => (b, t)
-                case _ => throw new IllegalArgumentException(
-                  "kafka format needs --input bootstrap-servers/topic")
-              }
-              graft.enrich.Protocol.fromCollector(
-                Sources.collectorTsvKafka(spark, bootstrap, topic))
-            case other => throw new IllegalArgumentException(s"unknown streaming format: $other")
-          }
-        def trigger[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T]) =
-          if (args.once) w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()) else w
-        val goodQ =
+      // One query per side, each with its own checkpoint. Under
+      // --refresh-dims every micro-batch of a side is computed under one
+      // config snapshot, but the two queries run on their own cadence, so a
+      // mid-stream config/dim swap can land between the two sides'
+      // executions of the same input offsets.
+      def startSink(name: String, path: String, format: String,
+                    side: (EnrichmentPipeline, DataFrame) => DataFrame) = {
+        val writer =
           if (args.refreshDims)
-            // AssetRefresher semantics: the pipeline (and its parquet dims,
-            // and the --config file itself) re-resolves per micro-batch
-            trigger(graft.streaming.RefreshableDim.transformEachBatch(raw)(
-              df => mkPipeline().run(df).filter(size(col("bad_row_errors")) === 0)) {
-                (batch, _) => batch.write.mode("append").parquet(args.good)
-              }
-              .option("checkpointLocation", args.checkpoint + "/good"))
-              .start()
+            graft.streaming.RefreshableDim.transformEachBatch(raw)(df => side(mkPipeline(), df)) {
+              (batch, _) => batch.write.mode("append").format(format).save(path)
+            }
           else
-            trigger(pipeline.run(raw)
-              .filter(size(col("bad_row_errors")) === 0)
-              .writeStream
-              .format("parquet")
-              .option("path", args.good)
-              .option("checkpointLocation", args.checkpoint + "/good")
-              .outputMode("append"))
-              .start()
-        val badQ =
-          if (args.bad.nonEmpty) {
-            val writer =
-              if (args.refreshDims)
-                // same per-batch rebuild as the good stream: within THIS
-                // sink, every row of a micro-batch is computed under one
-                // config snapshot. The good sink is an independent query
-                // with its own batch cadence, so a mid-stream config/dim
-                // swap can still land between the two sinks' executions of
-                // the same input offsets — unify under a single
-                // foreachBatch if cross-sink snapshot consistency matters.
-                graft.streaming.RefreshableDim.transformEachBatch(raw)(df =>
-                  graft.streaming.EnrichStream
-                    .badRows(df, mkPipeline(), payloadCols(df), etlUs)
-                    .select("bad_row")) { (batch, _) =>
-                  batch.write.mode("append").text(args.bad)
-                }
-              else
-                graft.streaming.EnrichStream.badRows(raw, pipeline, payloadCols(raw), etlUs)
-                  .select("bad_row").writeStream
-                  .format("text")
-                  .option("path", args.bad)
-                  .outputMode("append")
-            Some(trigger(writer.option("checkpointLocation", args.checkpoint + "/bad")).start())
-          } else None
-        goodQ.awaitTermination()
-        badQ.foreach(_.awaitTermination())
-
-      case other => throw new IllegalArgumentException(s"unknown mode: $other")
+            side(pipeline, raw).writeStream.format(format).option("path", path).outputMode("append")
+        val w = writer.option("checkpointLocation", s"${args.checkpoint}/$name")
+        (if (args.once) w.trigger(Trigger.AvailableNow()) else w).start()
+      }
+      val goodQ = startSink("good", args.good, "parquet", goodSide)
+      val badQ = if (args.bad.nonEmpty) Some(startSink("bad", args.bad, "text", badSide)) else None
+      goodQ.awaitTermination()
+      badQ.foreach(_.awaitTermination())
     }
-    if (args.mode == "batch" && !reused) spark.stop()
   }
 }

@@ -115,13 +115,17 @@ object UrlF {
     null
   }
 
-  /** try_cast('int') of a digit-only run: null on int overflow. */
-  private def tryParsePort(s: String): Integer =
-    if (s.length > 10) null
+  /** try_cast('int') of a digit-only run: null on int overflow. The cast
+    * parses by value, so leading zeros do not count toward the length. */
+  private def tryParsePort(s: String): Integer = {
+    var z = 0
+    while (z < s.length - 1 && s.charAt(z) == '0') z += 1
+    if (s.length - z > 10) null
     else {
-      val v = s.toLong
+      val v = s.substring(z).toLong
       if (v > Int.MaxValue) null else Integer.valueOf(v.toInt)
     }
+  }
 
   /** One-pass imperative twin of the six URL regexes (see the `*Spec`
     * Columns above for the exact patterns being mirrored). */

@@ -130,15 +130,4 @@ object Sources {
       .select(col("blob_path"), explode_outer(split(col("payload"), "\n")).as("value"))
       .where(col("value").isNull || col("value") =!= "")
   }
-
-  /** Kafka raw-event stream (value = collector TSV line). The transport
-    * options mirror the reference's stream-enrich source config. */
-  def collectorTsvKafka(spark: SparkSession, bootstrap: String, topic: String): DataFrame =
-    parseCollectorTsv(
-      spark.readStream
-        .format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .load()
-        .select(col("value").cast("string").as("value")))
 }

@@ -48,6 +48,11 @@ object TransportFactories {
     }
   }
 
+  /** The `input` section of one transport's app config. */
+  sealed trait SourceConfig {
+    def binding: SourceBinding
+  }
+
   // ---- Kinesis (reference config/config.kinesis.reference.hocon `input`) ----
 
   /** `input` section of the reference's kinesis app config. Maps onto the
@@ -70,7 +75,7 @@ object TransportFactories {
       * (incl. the lossless seq_str dedup identity) is IDENTICAL to the
       * live path, so backfill and live runs dedup the same way. */
     archiveDir: String = null
-  ) {
+  ) extends SourceConfig {
     require(streamName != null && streamName.nonEmpty, "kinesis: input.streamName is required")
     require(Set("TRIM_HORIZON", "LATEST", "AT_TIMESTAMP").contains(initialPositionType),
       s"kinesis: initialPosition.type must be TRIM_HORIZON | LATEST | AT_TIMESTAMP (got $initialPositionType)")
@@ -130,7 +135,7 @@ object TransportFactories {
       * publish_timestamp, data) instead of the live subscription — same
       * framing as the live path, see KinesisSourceConfig.archiveDir. */
     archiveDir: String = null
-  ) {
+  ) extends SourceConfig {
     require(subscription != null,
       "pubsub: input.subscription is required (projects/P/subscriptions/S)")
     private val Re = "^projects/([^/]+)/subscriptions/(.+)$".r
@@ -172,7 +177,7 @@ object TransportFactories {
     lookupHost: String = "127.0.0.1",
     lookupPort: Int = 4161,
     dumpDir: String = null
-  ) {
+  ) extends SourceConfig {
     require(topic != null && topic.nonEmpty, "nsq: input.topic is required")
     require(channel != null && channel.nonEmpty, "nsq: input.channel is required")
     require(lookupPort > 0 && lookupPort < 65536, s"nsq: bad lookupPort $lookupPort")
@@ -203,7 +208,7 @@ object TransportFactories {
     topicName: String,
     bootstrapServers: String,
     consumerConf: Map[String, String] = Map.empty
-  ) {
+  ) extends SourceConfig {
     require(topicName != null && topicName.nonEmpty, "kafka: input.topicName is required")
     require(bootstrapServers != null && bootstrapServers.nonEmpty,
       "kafka: input.bootstrapServers is required")
@@ -234,22 +239,11 @@ object TransportFactories {
   private def str(n: JsonNode, field: String, dflt: String = null): String =
     Option(n.get(field)).map(_.asText()).getOrElse(dflt)
 
-  /** `fromJson` + `.binding` without the per-transport cast — the one-call
-    * seam `graft.Main --transport` uses. */
-  def bindingFromJson(transport: String, json: String): SourceBinding =
-    fromJson(transport, json) match {
-      case c: KinesisSourceConfig => c.binding
-      case c: PubsubSourceConfig => c.binding
-      case c: NsqSourceConfig => c.binding
-      case c: KafkaSourceConfig => c.binding
-      case other => throw new IllegalStateException(s"unreachable: $other")
-    }
-
   /** Parse the `input` section of a reference minimal config (the minimal
     * HOCON files are plain JSON) for the given transport
     * (`kinesis | pubsub | nsq | kafka`). Unknown keys are accepted and
     * ignored, like the reference's own pureconfig defaults. */
-  def fromJson(transport: String, json: String): Any = {
+  def fromJson(transport: String, json: String): SourceConfig = {
     val root = mapper.readTree(json)
     val in = Option(root.get("input")).getOrElse(
       throw new IllegalArgumentException(s"$transport config: missing input section"))

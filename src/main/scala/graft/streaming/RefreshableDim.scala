@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.enrich.EnrichmentPipeline
-
 /** Asset hot-swap for long-running streams — the twin of the reference's
   * `AssetRefresher` (modules/common-fs2 `Assets.scala` / core
   * `AssetRefresher`: MaxMind/referer DBs re-download on a schedule and the
@@ -42,26 +40,4 @@ object RefreshableDim {
     raw.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       sink(transform(batch), batchId)
     }
-
-  /** Streaming enrichment with per-batch dim refresh: `mkPipeline` is
-    * re-invoked per micro-batch, so enrichments that read parquet dims
-    * (IpGeoLookup / IpAsnLookup / CurrencyConversion / WeatherLookup /
-    * RefererParse …) re-resolve their paths — the AssetRefresher
-    * contract. Pass a stable `EnrichmentPipeline` closure if the config
-    * itself is static; only the dim FILES need to change on disk. */
-  def enrichEachBatch(raw: DataFrame, mkPipeline: () => EnrichmentPipeline)(
-    sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    transformEachBatch(raw)(df => mkPipeline().run(df))(sink)
-
-  /** Parquet-sink convenience: enriched batches append to `path`,
-    * dims refresh per batch. */
-  def enrichToParquet(
-    raw: DataFrame,
-    mkPipeline: () => EnrichmentPipeline,
-    path: String,
-    checkpoint: String
-  ): DataStreamWriter[Row] =
-    enrichEachBatch(raw, mkPipeline) { (batch, _) =>
-      batch.write.mode("append").parquet(path)
-    }.option("checkpointLocation", checkpoint)
 }

@@ -40,7 +40,8 @@ import org.apache.spark.sql.functions._
   *
   * A real Kinesis deployment plugs its Spark connector in at this seam
   * (`spark.readStream.format("aws-kinesis")` → select the same four
-  * columns); Kafka ships in-box (`Sources.collectorTsvKafka`); the
+  * columns); Kafka ships in-box
+  * (`graft.sources.TransportFactories.KafkaSourceConfig`); the
   * file-backed [[Transport.FileShards]] is the broker-free simulation the
   * semantics spec drives.
   */

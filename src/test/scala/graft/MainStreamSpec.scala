@@ -57,6 +57,51 @@ class MainStreamSpec extends SparkSpec {
     assert(bad.length == 1 && bad(0).contains("unknown event code"))
   }
 
+  test("stream mode over unframed collector TSV files == batch mode over the same lines") {
+    val root = Files.createTempDirectory("main_tsv")
+    val in = root.resolve("in")
+    Files.createDirectories(in)
+    // two files = two deliveries; one bad event code, and one malformed
+    // line that parses to a null-field row
+    Files.write(in.resolve("a.tsv"),
+      Seq(collectorLine("pv"), collectorLine("zz")).mkString("\n").getBytes("UTF-8"))
+    Files.write(in.resolve("b.tsv"),
+      Seq(collectorLine("pv").replace("94.15.223.151", "10.0.0.7"), "not\ta collector line")
+        .mkString("\n").getBytes("UTF-8"))
+    def run(mode: String, extra: String*) = graft.Main.main(Array(
+      "--mode", mode, "--format", "collector-tsv", "--input", in.toString,
+      "--good", root.resolve(s"$mode-good").toString,
+      "--bad", root.resolve(s"$mode-bad").toString) ++ extra)
+    run("stream", "--checkpoint", root.resolve("ck").toString, "--once")
+    run("batch")
+
+    def good(mode: String): Seq[String] = {
+      val df = spark.read.parquet(root.resolve(s"$mode-good").toString)
+      df.select(df.columns.sorted.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+        .collect().map(_.toString).toSeq.sorted
+    }
+    // envelopes carry the job's start time: blank it before comparing
+    def bad(mode: String): Seq[String] =
+      spark.read.text(root.resolve(s"$mode-bad").toString).collect()
+        .map(_.getString(0).replaceAll("\"timestamp\":\"[^\"]*\"", "")).toSeq.sorted
+    assert(good("batch").length == 3)
+    assert(bad("batch").length == 1 && bad("batch").head.contains("unknown event code"))
+    assert(good("stream") == good("batch"))
+    assert(bad("stream") == bad("batch"))
+  }
+
+  test("batch mode requires --input; stream mode points --format kafka at --transport kafka") {
+    val root = Files.createTempDirectory("main_args")
+    val noInput = intercept[IllegalArgumentException](graft.Main.main(Array(
+      "--mode", "batch", "--transport", "nsq", "--transport-config", root.resolve("nsq.json").toString,
+      "--good", root.resolve("good").toString)))
+    assert(noInput.getMessage.contains("--input is required in batch mode"))
+    val kafka = intercept[IllegalArgumentException](graft.Main.main(Array(
+      "--mode", "stream", "--format", "kafka", "--input", "broker:9092/raw",
+      "--good", root.resolve("good").toString, "--checkpoint", root.resolve("ck").toString)))
+    assert(kafka.getMessage.contains("--transport kafka"))
+  }
+
   test("stream mode with --refresh-dims re-reads the enrichment config per batch") {
     val root = Files.createTempDirectory("main_refresh")
     val dump = root.resolve("dump").toString

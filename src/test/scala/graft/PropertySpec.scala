@@ -419,6 +419,7 @@ class PropertySpec extends SparkSpec {
       "", "no-scheme", "http//missing.colon/p", "://bare", "1http://digit.first/",
       "http://", "http://:8080/p", "http://host", "http://host/", "http://host:80/p",
       "https://host:443/p?q=1", "http://host:0080/p", "http://host:99999999999/p",
+      "http://h:00000000080/p",
       "http://host:12ab/p", "http://host:/p", "HTTPS://UP.example.COM:8443/Deep/Path?A=b#Frag",
       "scheme+x.y-z://odd.scheme/p", "http://h/p?", "http://h/p?#f", "http://h/p#",
       "http://h/p##double#frag", "http://h?q=1#f?fake=2", "what?is=this#anyway",

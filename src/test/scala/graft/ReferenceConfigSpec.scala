@@ -141,7 +141,13 @@ class ReferenceConfigSpec extends SparkSpec {
 
   test("asn_lookups: injected CSV set merges with inline list (csvAsns ++ botAsns)") {
     import spark.implicits._
-    val cfg = new String(Files.readAllBytes(dir.resolve("asn_lookups.json")), "UTF-8")
+    val cfg =
+      """{"schema": "iglu:com.snowplowanalytics.snowplow.enrichments/asn_lookups/jsonschema/1-0-0",
+        | "data": {"name": "asn_lookups", "vendor": "com.snowplowanalytics.snowplow.enrichments",
+        |   "enabled": true, "parameters": {
+        |     "botAsns": [{"asn": 123}, {"asn": 456}],
+        |     "bypassPlatforms": ["srv"],
+        |     "botAsnsFile": {"database": "bad-asn-list.csv", "uri": "http://assets.example.com/asn"}}}}""".stripMargin
     val (pipe, skipped) = EnrichmentConfig.fromReferenceConfigs(Seq(cfg),
       asnBotLists = Map("bad-asn-list.csv" -> Set(789L)))
     assert(skipped.isEmpty, skipped.mkString(", "))

@@ -29,7 +29,10 @@ class RefreshableDimSpec extends SparkSpec {
     val raw = mem.toDF().toDF("event_id", "user_ipaddress")
     val mkPipeline = () => EnrichmentPipeline(Seq(IpGeoLookup(Nil, rangesPath = dimPath)))
     val q = RefreshableDim
-      .enrichToParquet(raw, mkPipeline, outPath, ckpt)
+      .transformEachBatch(raw)(df => mkPipeline().run(df)) { (batch, _) =>
+        batch.write.mode("append").parquet(outPath)
+      }
+      .option("checkpointLocation", ckpt)
       .start()
     try {
       mem.addData((1L, "10.1.2.3"))
